@@ -2436,9 +2436,10 @@ def merge_schema_evolution_versioned(spark: SparkSession, sf_dir: str) -> DataFr
     pinned in tests/test_versioned.py). Closes the 'no schema
     evolution' non-goal merge_into declared.
 
-    Scale: evolution is metadata-only on the untouched files —
-    mergeSchema surfaces the new column as NULL; no backfill rewrite
-    of 100 TB ever happens."""
+    Scale: evolution is metadata-only on the untouched files — the
+    merge's manifest records the grown data schema, and reads with it
+    surface the new column as NULL for files without it; no backfill
+    rewrite of 100 TB ever happens."""
     vt = _merge_evolve_orders(spark, sf_dir)
     return vt.read(spark, 1).select("o_orderkey", "o_totalprice", "tier")
 

@@ -42,6 +42,10 @@ manifests, both published):
   skipping) and Bloom bitsets (equality skipping) over a key column,
   so both pruning families run driver-side on KB-scale metadata
   before Spark lists a single file;
+- every manifest records the table's physical **data schema** (Spark's
+  ``StructType.json()``, Delta's ``metaData.schemaString``): the union
+  of the parent's and the written files' schemas, so reads pass it to
+  ``spark.read.schema`` instead of inferring it from file footers;
 - **column mapping** (the published Delta column-mapping recipe):
   once a table's schema metadata is initialized, every column carries
   a stable id and a PHYSICAL parquet name decoupled from its logical
@@ -68,6 +72,7 @@ probe is one semi-join aggregating to a bounded distinct-file list.
 from __future__ import annotations
 
 import copy
+import functools
 import json
 import os
 import uuid
@@ -88,6 +93,71 @@ _PART_PREFIX = "_p__"
 # (distinct from an explicit None, which records a mapping downgrade).
 _INHERIT = object()
 
+# Footer key under which Spark's parquet writer stores the file's schema
+# as ``StructType.json()`` — the schema Spark's own inference reads back.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt):
+    """Spark's ``DataType.asNullable`` on a ``jsonValue()`` dict: file
+    scans surface every field, element and map value as nullable."""
+    if not isinstance(dt, dict):
+        return dt
+    t = dt.get("type")
+    if t == "struct":
+        return {
+            **dt,
+            "fields": [
+                {**f, "nullable": True, "type": _as_nullable(f["type"])}
+                for f in dt["fields"]
+            ],
+        }
+    if t == "array":
+        return {**dt, "containsNull": True,
+                "elementType": _as_nullable(dt["elementType"])}
+    if t == "map":
+        return {**dt, "valueContainsNull": True,
+                "keyType": _as_nullable(dt["keyType"]),
+                "valueType": _as_nullable(dt["valueType"])}
+    return dt
+
+
+def _merge_types(left, right):
+    """Union of two ``jsonValue()`` types the way parquet ``mergeSchema``
+    unions file schemas: left's fields keep their order, right's new
+    fields append, nested structs merge recursively. None on anything
+    else that differs (a type change, names equal up to case) — the
+    caller then records no schema and reads infer it, as before."""
+    if left == right:
+        return left
+    if not (
+        isinstance(left, dict)
+        and isinstance(right, dict)
+        and left.get("type") == right.get("type") == "struct"
+    ):
+        return None
+    rest = {f["name"]: f for f in right["fields"]}
+    fields = []
+    for f in left["fields"]:
+        g = rest.pop(f["name"], None)
+        if g is not None:
+            t = _merge_types(f["type"], g["type"])
+            if t is None:
+                return None
+            f = {**f, "type": t}
+        fields.append(f)
+    seen = {f["name"].lower() for f in fields}
+    if any(n.lower() in seen for n in rest):
+        return None
+    return {**left, "fields": fields + list(rest.values())}
+
+
+@functools.lru_cache(maxsize=64)
+def _struct_type(data_schema: str):
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(data_schema))
+
 
 class VersionConflictError(RuntimeError):
     """Another writer committed this version first (O_EXCL lost)."""
@@ -104,10 +174,12 @@ class VersionedTable:
     ``stats_col``: optional column whose per-file min/max is recorded
     in every commit's manifest (read driver-side from the parquet
     FOOTERS — no data scan). With it set, MERGE's matched-file probe
-    becomes metadata-first: source keys join the bounded file-stats
-    list to select candidate files, and only those are scanned for
-    exact matches — the Iceberg/Delta data-skipping recipe. Reads via
-    :meth:`read_pruned` skip files the same way."""
+    becomes metadata-first: the source keys' [min, max] selects
+    candidate files from the snapshot's stats on the driver, and only
+    those are scanned for exact matches — the Iceberg/Delta
+    data-skipping recipe. Reads via :meth:`read_pruned` skip files
+    with the same interval test; DELETE-by-keys joins the keys against
+    the stats per key (:meth:`_candidate_files`)."""
 
     def __init__(
         self,
@@ -370,6 +442,7 @@ class VersionedTable:
             "stats": dict(base.get("stats") or {}),
             "blooms": dict(base.get("blooms") or {}),
             "rows": dict(base.get("rows") or {}),
+            "data_schema": base.get("data_schema"),
             "schema": base.get("schema"),
             "expectations": base.get("expectations"),
             "partition_spec": base.get("partition_spec"),
@@ -397,6 +470,7 @@ class VersionedTable:
             out["parent"] = meta.get("parent") if meta else None
         if "operation" not in out and meta:
             out["operation"] = meta.get("operation")
+        out["data_schema"] = state["data_schema"]
         out["schema"] = state["schema"]
         out["expectations"] = state["expectations"]
         out["partition_spec"] = state["partition_spec"]
@@ -406,10 +480,15 @@ class VersionedTable:
     @staticmethod
     def _apply_delta(delta: dict, state: dict) -> None:
         """Replay ONE delta manifest onto mutable resolved state
-        ({'files': set, 'stats', 'blooms', 'schema', 'expectations',
-        'dv'}) — the single replay implementation shared by full
-        resolution (_resolve) and part-pruned resolution
-        (_resolve_selected), so the two can never diverge."""
+        ({'files': set, 'stats', 'blooms', 'data_schema', 'schema',
+        'expectations', 'dv'}) — the single replay implementation
+        shared by full resolution (_resolve) and part-pruned resolution
+        (_resolve_selected), so the two can never diverge.
+
+        Every commit records its full data schema, so it is never
+        inherited past a manifest that lacks it: such a manifest was
+        written before the schema was recorded, and its reads infer."""
+        state["data_schema"] = delta.get("data_schema")
         if "schema" in delta:
             state["schema"] = delta["schema"]
         if "expectations" in delta:
@@ -496,6 +575,7 @@ class VersionedTable:
             "stats": stats,
             "blooms": blooms,
             "rows": rows,
+            "data_schema": root.get("data_schema"),
             "schema": root.get("schema"),
             "expectations": root.get("expectations"),
             "partition_spec": root.get("partition_spec"),
@@ -527,6 +607,7 @@ class VersionedTable:
                 "stats": state["stats"],
                 "blooms": state["blooms"],
                 "rows": state["rows"],
+                "data_schema": state["data_schema"],
                 "schema": state["schema"],
                 "expectations": state["expectations"],
                 "partition_spec": state["partition_spec"],
@@ -922,6 +1003,7 @@ class VersionedTable:
         dv_add: dict | None = None,
         dv_state=_INHERIT,
         branch: str | None = None,
+        data_schema=_INHERIT,
         **extra,
     ) -> int:
         """Publish one commit as a DELTA manifest: only the files
@@ -935,7 +1017,14 @@ class VersionedTable:
         once a table has schema metadata, EVERY later manifest carries
         the full (column-count-sized, so still churn-class) mapping —
         resolution then never has to walk past its own commit to learn
-        the column mapping in force at that version."""
+        the column mapping in force at that version.
+
+        ``data_schema`` (the physical parquet schema reads pass to
+        ``spark.read.schema``) defaults to the parent's unioned with
+        the Spark schemas in the added files' footers; rollback and
+        clone pass the target snapshot's. Every manifest carries it,
+        null when unknown (a parent written before it was recorded, a
+        footer without Spark's schema, a type conflict)."""
         # Version-slot allocation (refs/WAP, round 12): lineage is the
         # parent POINTER; the number is an exclusive-create slot. The
         # conflict detector is UNCHANGED from the pre-refs design — a
@@ -975,11 +1064,17 @@ class VersionedTable:
         # Iceberg's record_count): makes COUNT(*) and history row
         # audits METADATA-ONLY reads (count_rows), never table scans
         rows_entry: dict = {}
+        written: list = []  # each added file's Spark schema, None if unknown
         for f in add:
             try:
-                rows_entry[f] = self._file_num_rows(f)
+                md = self._footer(f)
             except Exception:
-                pass  # stats are acceleration; count_rows degrades
+                written.append(None)
+                continue  # stats are acceleration; count_rows degrades
+            rows_entry[f] = int(md.num_rows)
+            written.append((md.metadata or {}).get(_SPARK_SCHEMA_KEY))
+        if data_schema is _INHERIT:
+            data_schema = self._union_data_schema(parent, written)
         if schema is _INHERIT:
             schema = parent.get("schema") if parent else None
         if schema is not None:
@@ -1061,6 +1156,7 @@ class VersionedTable:
             "stats": {f: stats[f] for f in add if f in stats},
             "blooms": {f: blooms[f] for f in add if f in blooms},
             "rows": rows_entry,
+            "data_schema": data_schema,
             **schema_entry,
             **exp_entry,
             **ps_entry,
@@ -1111,6 +1207,28 @@ class VersionedTable:
             except Exception:
                 pass
         return version
+
+    @staticmethod
+    def _union_data_schema(parent: dict | None, written: list) -> str | None:
+        """The data schema a commit records: the parent's, unioned in
+        ``mergeSchema`` order with each distinct schema among the added
+        files (``written``: footer ``StructType.json()`` strings, None
+        where a footer lacks one). Like Delta's ``schemaString`` it
+        only grows: a column stays once added, even if no live file
+        holds it any more."""
+        if parent is not None and parent.get("data_schema") is None:
+            return None  # the parent's files were never described
+        out = json.loads(parent["data_schema"]) if parent else None
+        for s in dict.fromkeys(written):
+            if s is None:
+                return None
+            new = _as_nullable(json.loads(s))
+            out = new if out is None else _merge_types(out, new)
+            if out is None:
+                return None
+        return None if out is None else json.dumps(
+            out, separators=(",", ":"), sort_keys=True
+        )
 
     # -- column mapping (logical <-> physical names) --------------------
     #
@@ -1195,9 +1313,10 @@ class VersionedTable:
         columns, in mapping order: renamed columns surface under their
         current name, dropped columns (absent from the mapping)
         disappear even though old data files still store them. A
-        mapped column present in no scanned file is skipped (additive
-        evolution surfaces it as NULL via mergeSchema whenever any
-        file carries it). ``extra`` names pass-through columns
+        mapped column the scan lacks is skipped; with a recorded data
+        schema the scan has every column any commit wrote, so an
+        additively evolved column surfaces as NULL for files without
+        it. ``extra`` names pass-through columns
         (position metadata for deletion-vector writes) kept alongside
         the mapped set."""
         schema = snap.get("schema")
@@ -1232,11 +1351,21 @@ class VersionedTable:
         immutable. Only DVs attached to files in THIS scan are loaded;
         the DV relation is churn-sized (one row per deleted row), so it
         broadcasts. ``keep_pos=True`` keeps the (file, pos) columns for
-        the DV writer itself."""
+        the DV writer itself.
+
+        The scan reads with the snapshot's recorded data schema, so
+        building it runs no Spark job and every scan of the snapshot,
+        pruned or not, has the same columns (NULL where a file lacks
+        one). Snapshots whose manifest predates the recorded schema
+        infer it from the footers (``mergeSchema``, one Spark job)."""
         rels = snap["files"] if files is None else files
-        raw = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, f) for f in rels]
+        ds = snap.get("data_schema")
+        reader = (
+            spark.read.schema(_struct_type(ds))
+            if ds
+            else spark.read.option("mergeSchema", "true")
         )
+        raw = reader.parquet(*[os.path.join(self.path, f) for f in rels])
         dv = snap.get("dv") or {}
         basenames = {os.path.basename(f) for f in rels}
         dv_paths = sorted(
@@ -1249,9 +1378,9 @@ class VersionedTable:
             ).withColumn("__dv_pos", F.col("_metadata.row_index"))
         if dv_paths:
             dvdf = (
-                spark.read.parquet(
-                    *[os.path.join(self.path, p) for p in dv_paths]
-                )
+                # the DV writers' fixed schema: no inference job
+                spark.read.schema("file string, pos bigint")
+                .parquet(*[os.path.join(self.path, p) for p in dv_paths])
                 .select(
                     F.col("file").alias("__dv_file"),
                     F.col("pos").alias("__dv_pos"),
@@ -1710,13 +1839,14 @@ class VersionedTable:
                 out[rel] = [lo, hi]
         return out
 
-    def _file_num_rows(self, rel: str) -> int:
-        """Row count of one data file from its parquet FOOTER (no data
-        pages touched) — recorded per added file at commit time."""
+    def _footer(self, rel: str):
+        """One data file's parquet FOOTER (no data pages touched): the
+        row count and Spark schema recorded per added file at commit
+        time."""
         import pyarrow.parquet as pq
 
         path = rel if os.path.isabs(rel) else os.path.join(self.path, rel)
-        return int(pq.ParquetFile(path).metadata.num_rows)
+        return pq.ParquetFile(path).metadata
 
     def count_rows(self, version: int | None = None) -> int | None:
         """COUNT(*) as a METADATA-ONLY read (Delta numRecords /
@@ -2213,6 +2343,7 @@ class VersionedTable:
         }
         dst._commit_delta(
             "clone", None, files, stats, blooms,
+            data_schema=snap.get("data_schema"),
             schema=snap.get("schema"),
             expectations=snap.get("expectations"),
             dv_state=dv,
@@ -2239,7 +2370,10 @@ class VersionedTable:
                     target.get("blooms") or {},
                     # restore the TARGET's column mapping too (an
                     # explicit None here records a mapping downgrade
-                    # when rolling back past the mapping's creation)
+                    # when rolling back past the mapping's creation),
+                    # and its data schema: columns added after the
+                    # target leave the read with their files
+                    data_schema=target.get("data_schema"),
                     schema=target.get("schema"),
                     expectations=target.get("expectations"),
                     dv_state=target.get("dv") or {},
@@ -2461,13 +2595,15 @@ class VersionedTable:
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Time-travel read: the file list of exactly one snapshot.
 
-        ``mergeSchema`` is on because appends may evolve the schema
-        (add columns): rows from pre-evolution files surface the new
-        columns as NULL — additive evolution plus metadata-only
-        RENAME/DROP via column mapping (type changes are the caller's
-        migration). With mapping active the physical scan is projected
-        to this snapshot's LOGICAL columns. Cost is a footer read per
-        file of ONE snapshot — bounded metadata."""
+        The scan uses the data schema this snapshot's manifest records
+        (the union of every schema its commits wrote), so appends may
+        evolve the schema (add columns): rows from pre-evolution files
+        surface the new columns as NULL — additive evolution plus
+        metadata-only RENAME/DROP via column mapping (type changes are
+        the caller's migration). With mapping active the physical scan
+        is projected to this snapshot's LOGICAL columns. Building the
+        DataFrame runs no Spark job; only manifests written before the
+        schema was recorded infer it from the footers."""
         snap = self.snapshot(version)
         files = [os.path.join(self.path, f) for f in snap["files"]]
         if not files:
@@ -2563,6 +2699,40 @@ class VersionedTable:
         ]
         return sorted(set(hit) | set(no_stats))
 
+    @staticmethod
+    def _range_candidates(snap: dict, lo, hi) -> list[str]:
+        """Files of ``snap`` whose manifest [min, max] on ``stats_col``
+        intersects [lo, hi], plus every file without stats — the
+        driver-side interval test shared by read_pruned and MERGE."""
+        stats = snap.get("stats") or {}
+        return [
+            f
+            for f in snap["files"]
+            if f not in stats or not (stats[f][1] < lo or stats[f][0] > hi)
+        ]
+
+    def _merge_candidates(self, snap: dict, key: str, key_range: tuple) -> list[str]:
+        """MERGE probe candidates, picked on the driver from the
+        snapshot's resolved stats: the files whose [min, max] meets the
+        source keys' [min, max]. Coarser than _candidate_files' per-key
+        join (a source whose keys sit in far-apart clusters also probes
+        the files between them), but the probe join after it is exact,
+        so the rewritten set is the same and picking runs no Spark job.
+        Every file is a candidate when ``key`` is not the stats column
+        or the stats cannot be compared with the keys."""
+        lo, hi = key_range
+        if lo is None:
+            return []  # no non-NULL source key: no target row can match
+        phys = {
+            c["name"]: c["phys"] for c in (snap.get("schema") or {}).get("cols", [])
+        }.get(key, key)
+        if self.stats_col is None or phys != self.stats_col:
+            return list(snap["files"])
+        try:
+            return self._range_candidates(snap, lo, hi)
+        except TypeError:
+            return list(snap["files"])
+
     def read_pruned(
         self,
         spark: SparkSession,
@@ -2591,12 +2761,7 @@ class VersionedTable:
         snap = self._resolve_selected(version, _keep)
         if snap is None:
             snap = self.snapshot(version)
-        stats = snap.get("stats") or {}
-        files = [
-            f
-            for f in snap["files"]
-            if f not in stats or not (stats[f][1] < lo or stats[f][0] > hi)
-        ]
+        files = self._range_candidates(snap, lo, hi)
         if not files:
             return self.read(spark, snap["version"]).limit(0)
         return self._scan(spark, snap, files=files)
@@ -4267,10 +4432,12 @@ class VersionedTable:
         ``update_set`` may cover a subset (others pass through),
         ``insert_exprs`` must cover every target column.
 
-        File pruning: a distributed semi-join marks the distinct data
-        files that contain at least one matched key (``input_file_name``
-        per row, aggregated to a bounded file list); only those files
-        are rewritten. Unmatched-source rows (inserts) can, by
+        File pruning: the source keys' [min, max] picks candidate files
+        from the manifest stats on the driver, then a distributed
+        semi-join over the candidates marks the distinct data files
+        that contain at least one matched key (the scan's file name per
+        row, aggregated to a bounded file list); only those files are
+        rewritten. Unmatched-source rows (inserts) can, by
         construction, match no file anywhere, so they join the
         rewritten partition set. Every other file is carried into the
         new snapshot by reference — at 100 TB with a clustered merge
@@ -4290,8 +4457,9 @@ class VersionedTable:
         The source must have AT MOST ONE row per ``source_key`` —
         duplicate keys would fan the matched target row out through
         the full-outer join, silently growing the table. Enforced up
-        front (one churn-sized aggregate), matching Delta's "multiple
-        source rows matched" MERGE error.
+        front (one churn-sized aggregate, which also yields the key
+        range for file pruning), matching Delta's "multiple source rows
+        matched" MERGE error.
 
         ``cdc=True`` additionally materializes the commit's CHANGE
         rows (insert/update events with old/new values, no-op updates
@@ -4452,24 +4620,32 @@ class VersionedTable:
         self._validate_merge_clauses(
             matched, not_matched, not_matched_by_source, key
         )
-        dup = (
-            source.groupBy(F.col(source_key))
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
+        # one aggregate, collected once: the duplicate check plus the
+        # source keys' [min, max], which picks probe candidates from the
+        # manifest stats on the driver
+        chk = (
+            source.groupBy(F.col(source_key).alias("__k"))
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .agg(
+                F.max("__n").alias("n"),
+                F.max_by("__k", "__n").alias("dup"),
+                F.min("__k").alias("lo"),
+                F.max("__k").alias("hi"),
+            )
+            .collect()[0]
         )
-        if dup:
+        if (chk["n"] or 0) > 1:
             raise ValueError(
                 f"merge_full source has duplicate {source_key!r} values "
-                f"(e.g. {dup[0][0]!r}): each source key must match at most "
+                f"(e.g. {chk['dup']!r}): each source key must match at most "
                 f"one row — dedupe the source first"
             )
         for _ in range(8):
             try:
                 return self._merge_full_attempt(
                     spark, source, key, source_key, matched, not_matched,
-                    not_matched_by_source, cdc, evolve, extra_meta, branch,
+                    not_matched_by_source, cdc, evolve, (chk["lo"], chk["hi"]),
+                    extra_meta, branch,
                 )
             except VersionConflictError:
                 continue
@@ -4488,6 +4664,7 @@ class VersionedTable:
         not_matched_by_source: list[dict],
         cdc: bool,
         evolve: bool,
+        key_range: tuple,
         extra_meta: dict | None = None,
         branch: str | None = None,
     ) -> int:
@@ -4495,6 +4672,8 @@ class VersionedTable:
         # step for read-modify-write commits): parent at the branch
         # head (or main for a new branch), publish moves only the
         # branch ref. Same copy-on-write rewrite either way.
+        # ``key_range``: the source keys' [min, max] (None, None for a
+        # source without a non-NULL key).
         snap = self.snapshot(self._branch_base(branch))
         target = self.read(spark, snap["version"])
         target_cols = target.columns
@@ -4519,13 +4698,14 @@ class VersionedTable:
                 "evolution"
             )
         out_cols = target_cols + new_cols
-        skeys = source.select(F.col(source_key).alias("__mk")).distinct()
+        # merge_full's duplicate check made the source keys distinct
+        skeys = source.select(F.col(source_key).alias("__mk"))
         if not_matched_by_source:
             # any unmatched target row may change: full rewrite
             rewritten = list(snap["files"])
             retained: list[str] = []
         else:
-            probe_rel = self._candidate_files(spark, skeys, "__mk", snap)
+            probe_rel = self._merge_candidates(snap, key, key_range)
             if probe_rel:
                 probe = self._scan(
                     spark, snap, files=probe_rel, keep_pos=True

@@ -730,7 +730,20 @@ def test_merge_rejects_duplicate_source_keys(spark, tmp_path):
             update_set={"v": F.col("nv")},
             insert_exprs={"k": F.col("s_k"), "v": F.col("nv")},
         )
+    # the check is fused with the key-range aggregate: it must still
+    # name an actual duplicate among many distinct keys
+    mixed = spark.createDataFrame(
+        [(k, 1.0) for k in range(50)] + [(37, 2.0), (37, 3.0), (3000, 1.0)],
+        "s_k bigint, nv double",
+    )
+    with pytest.raises(ValueError, match=r"duplicate 's_k' values \(e\.g\. 37\)"):
+        vt.merge_into(
+            spark, mixed, key="k", source_key="s_k",
+            update_set={"v": F.col("nv")},
+            insert_exprs={"k": F.col("s_k"), "v": F.col("nv")},
+        )
     assert vt.read(spark).count() == 100  # nothing committed
+    assert vt.latest_version() == 0
 
 
 def test_merge_across_schema_evolution_boundary(spark, tmp_path):
